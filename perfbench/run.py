@@ -374,6 +374,26 @@ class Run:
         }
 
 
+def stop_spark(spark) -> None:
+    """Stop the session, then the JVM and its Python workers, and wait
+    until each of them has exited."""
+    from pyspark import SparkContext
+    from spans import process_tree
+
+    children = [p for p in process_tree() if p != os.getpid()]
+    gateway = SparkContext._gateway
+    spark.stop()
+    if gateway is not None:
+        gateway.shutdown()
+        gateway.proc.stdin.close()  # the JVM exits when its stdin closes
+        gateway.proc.wait(timeout=120)
+    deadline = time.monotonic() + 60
+    while any(os.path.exists(f"/proc/{p}") for p in children):
+        if time.monotonic() > deadline:
+            raise RuntimeError(f"Spark processes still running: {children}")
+        time.sleep(0.1)
+
+
 def main(argv=None) -> int:
     args = parse_args(argv)
     if not os.path.isdir(os.path.join(ROOT, "data_prepper_spark")):
@@ -404,7 +424,7 @@ def main(argv=None) -> int:
         host = host_identity(run.spark, run.n_cores)
     finally:
         if getattr(run, "spark", None) is not None:
-            run.spark.stop()
+            stop_spark(run.spark)
         shutil.rmtree(run.dir, ignore_errors=True)
     run.check()
     print(json.dumps({"host": host, "workload": args.workload, "seed": args.seed,
